@@ -184,12 +184,9 @@ object Builtins {
     * or pattern propagates uncached, so error semantics are per-call
     * unchanged. Bounded: a pathological corpus streaming unique regexes
     * falls back to uncached compilation instead of growing the map. */
-  private val regexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (JPattern, List[String])]()
+  private val regexCache = new BoundedCache[String, (JPattern, List[String])](4096)
   private def compileRegex(re0: String, flags: String): (JPattern, List[String]) =
-    if (regexCache.size > 4096) compileRegexUncached(re0, flags)
-    else regexCache.computeIfAbsent(flags + " " + re0,
-      _ => compileRegexUncached(re0, flags))
+    regexCache.getOrCompute(flags + " " + re0)(_ => compileRegexUncached(re0, flags))
 
   private def compileRegexUncached(re0: String, flags: String): (JPattern, List[String]) = {
     val re = translatePosix(re0)

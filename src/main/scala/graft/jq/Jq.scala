@@ -1,9 +1,9 @@
 package graft.jq
 
 
-import com.fasterxml.jackson.core.JsonFactory
+import com.fasterxml.jackson.core.{JsonFactory, JsonParseException, JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import java.util.concurrent.ConcurrentHashMap
+import java.nio.charset.StandardCharsets
 
 /** Public entry point: compile a jq program once, run it per JSON value.
   *
@@ -34,45 +34,75 @@ final class CompiledJq private[jq] (val ast: JqExpr) extends Serializable {
     * pruned parse still lexes every byte), minus the tree-building cost of
     * untouched fields. */
   def applyToText(jsonText: String): Iterator[JsonNode] = {
-    val (input, error) = footprint match {
-      case Some(fields) => Jq.parsePrunedWithError(jsonText, fields)
-      case None => Jq.parseWithError(jsonText)
-    }
+    val (input, error) = Jq.withErrorContract(jsonText)(t => parse(Jq.parser(t)))
     apply(input, Map("error" -> error))
+  }
+
+  /** [[applyToText]] of `new String(bytes, off, len, UTF_8)`, without
+    * decoding when it can: strict UTF-8 parses in place with Jackson's byte
+    * parser. The String lane runs instead when the bytes are not strict
+    * UTF-8 (Java's decoder would replace some of them, so the byte parser
+    * would see a different text) or the byte parse fails (`$error` carries
+    * the String lane's message and the decoded input, as in the reference).
+    * Outputs and `$error` are therefore always those of [[applyToText]]. */
+  def applyToUtf8(bytes: Array[Byte], off: Int, len: Int): Iterator[JsonNode] = {
+    val input =
+      if (!Utf8.isStrict(bytes, off, len)) null
+      else try parse(Jq.parser(bytes, off, len)) catch { case _: Exception => null }
+    if (input == null) applyToText(new String(bytes, off, len, StandardCharsets.UTF_8))
+    else apply(input, Map("error" -> Json.NullN))
+  }
+
+  private def parse(parser: JsonParser): JsonNode = footprint match {
+    case Some(fields) => Jq.parsePruned(parser, fields)
+    case None => Jq.parseJson(parser)
   }
 }
 
 object Jq {
-  // unescaped-control-chars tolerance matches JsonQueryUDTF.java:61
+  // unescaped-control-chars tolerance matches JsonQueryUDTF.java:61.
+  // Byte input is always UTF-8: charset detection would skip a BOM and read
+  // 00-padded bytes as UTF-16/32, where the String lane rejects both.
   private val factory: JsonFactory = {
     val f = new JsonFactory()
-    f.enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_UNQUOTED_CONTROL_CHARS)
+    f.enable(JsonParser.Feature.ALLOW_UNQUOTED_CONTROL_CHARS)
+    f.disable(JsonFactory.Feature.CHARSET_DETECTION)
     f
   }
 
   private val mappers: ThreadLocal[ObjectMapper] =
     ThreadLocal.withInitial(() => new ObjectMapper(factory))
 
-  private val cache = new ConcurrentHashMap[String, CompiledJq]()
+  private[jq] val compileCache = new BoundedCache[String, CompiledJq](4096)
 
   /** Parse + desugar + singularity-rewrite a jq program.
     * Throws JqSyntaxError on bad programs. */
   def compile(program: String): CompiledJq =
     new CompiledJq(StrictRewrite(Parser.parse(program)))
 
-  /** Per-JVM compile cache — executors compile each distinct program once. */
+  /** Per-JVM compile cache — executors compile each distinct program once.
+    * Bounded like the regex cache: past 4096 programs, compile uncached. */
   def compileCached(program: String): CompiledJq =
-    cache.computeIfAbsent(program, p => compile(p))
+    compileCache.getOrCompute(program)(compile)
+
+  /** Jackson parser over a JSON text. */
+  private[jq] def parser(text: String): JsonParser = mappers.get().createParser(text)
+
+  /** Jackson parser over UTF-8 bytes (no BOM or UTF-16/32 detection). */
+  private[jq] def parser(bytes: Array[Byte], off: Int, len: Int): JsonParser =
+    mappers.get().createParser(bytes, off, len)
 
   /** Strict JSON parse incl. trailing-garbage rejection
     * (JsonQueryUDTF.java:83-87). */
-  def parseJson(text: String): JsonNode = {
+  def parseJson(text: String): JsonNode = parseJson(parser(text))
+
+  /** [[parseJson]] over a parser from [[parser]]; closes it. */
+  private[jq] def parseJson(parser: JsonParser): JsonNode = {
     val mapper = mappers.get()
-    val parser = mapper.createParser(text)
     try {
       val node = mapper.readTree[JsonNode](parser)
       if (parser.nextToken() != null)
-        throw new com.fasterxml.jackson.core.JsonParseException(parser, "trailing characters")
+        throw new JsonParseException(parser, "trailing characters")
       if (node == null) Json.NullN else node
     } finally parser.close()
   }
@@ -80,7 +110,7 @@ object Jq {
   /** The corrupt-input contract shared by the full and pruned parse lanes:
     * null input → (null, no error); parse failure → (null, the reference's
     * three-field $error object). ONE definition so the lanes cannot drift. */
-  private def withErrorContract(text: String)(parse: String => JsonNode): (JsonNode, JsonNode) =
+  private[jq] def withErrorContract(text: String)(parse: String => JsonNode): (JsonNode, JsonNode) =
     if (text == null) (Json.NullN, Json.NullN)
     else
       try (parse(text), Json.NullN)
@@ -106,19 +136,21 @@ object Jq {
     * the value). Trailing garbage rejected exactly like [[parseJson]];
     * duplicate keys keep the LAST occurrence at every level (Jackson
     * readTree behavior: ObjectNode.set overwrites). */
-  def parsePruned(text: String, fields: Footprint.Fields): JsonNode = {
+  def parsePruned(text: String, fields: Footprint.Fields): JsonNode = parsePruned(parser(text), fields)
+
+  /** [[parsePruned]] over a parser from [[parser]]; closes it. */
+  private[jq] def parsePruned(parser: JsonParser, fields: Footprint.Fields): JsonNode = {
     val mapper = mappers.get()
-    val parser = mapper.createParser(text)
     def prunedObject(keep: String => Option[Option[Set[String]]]): JsonNode = {
       val obj = mapper.createObjectNode()
-      while (parser.nextToken() != com.fasterxml.jackson.core.JsonToken.END_OBJECT) {
+      while (parser.nextToken() != JsonToken.END_OBJECT) {
         val name = parser.currentName()
         parser.nextToken() // advance to the value
         keep(name) match {
           case None => parser.skipChildren() // no-op on scalars; skips whole subtrees
           case Some(None) => obj.set[JsonNode](name, mapper.readTree[JsonNode](parser))
           case Some(Some(sub)) =>
-            if (parser.currentToken() == com.fasterxml.jackson.core.JsonToken.START_OBJECT)
+            if (parser.currentToken() == JsonToken.START_OBJECT)
               obj.set[JsonNode](name, prunedObject(n => if (sub.contains(n)) Some(None) else None))
             else // non-object value: the subfield certificate says nothing — materialize
               obj.set[JsonNode](name, mapper.readTree[JsonNode](parser))
@@ -130,11 +162,11 @@ object Jq {
       val first = parser.nextToken()
       val node: JsonNode =
         if (first == null) null
-        else if (first == com.fasterxml.jackson.core.JsonToken.START_OBJECT)
+        else if (first == JsonToken.START_OBJECT)
           prunedObject(fields.get)
         else mapper.readTree[JsonNode](parser)
       if (parser.nextToken() != null)
-        throw new com.fasterxml.jackson.core.JsonParseException(parser, "trailing characters")
+        throw new JsonParseException(parser, "trailing characters")
       if (node == null) Json.NullN else node
     } finally parser.close()
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.jq.{Jq, JqError, Json}
+import graft.jq.{Jq, Json}
 
 /** Scalar sugar over the jq engine (Spark-first additions; the reference
   * only ships the UDTF, but scalar extraction is the dominant usage in
@@ -26,9 +26,8 @@ case class JqString(child: Expression, program: String)
 
   override def eval(input: InternalRow): Any = {
     val raw = child.eval(input)
-    val jsonText = if (raw == null) null else raw.asInstanceOf[UTF8String].toString
-    try {
-      val it = compiled.applyToText(jsonText)
+    JsonQueryGenerator.guard(raw) {
+      val it = JsonQueryGenerator.outputs(compiled, raw)
       if (!it.hasNext) null
       else {
         val n = it.next()
@@ -36,10 +35,6 @@ case class JqString(child: Expression, program: String)
         else if (n.isTextual) UTF8String.fromString(n.textValue())
         else UTF8String.fromString(Json.serialize(n))
       }
-    } catch {
-      case e: JqError =>
-        throw new RuntimeException(
-          s"""jq returned an error "${e.getMessage}" from input: $jsonText""", e)
     }
   }
 
@@ -60,17 +55,12 @@ case class JqExtractAll(child: Expression, program: String)
 
   override def eval(input: InternalRow): Any = {
     val raw = child.eval(input)
-    val jsonText = if (raw == null) null else raw.asInstanceOf[UTF8String].toString
-    try {
-      val out = compiled.applyToText(jsonText).map { n =>
+    JsonQueryGenerator.guard(raw) {
+      val out = JsonQueryGenerator.outputs(compiled, raw).map { n =>
         if (n.isTextual) UTF8String.fromString(n.textValue())
         else UTF8String.fromString(Json.serialize(n))
       }.toArray[Any]
       new GenericArrayData(out)
-    } catch {
-      case e: JqError =>
-        throw new RuntimeException(
-          s"""jq returned an error "${e.getMessage}" from input: $jsonText""", e)
     }
   }
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.jq.{Jq, JqError, Json}
+import graft.jq.{CompiledJq, Jq, JqError, Json}
 
 /** Spark-native equivalent of the reference UDTF
   * (reference: JsonQueryUDTF.java — jq(JSON, JQ, TYPE...) Hive generator).
@@ -46,21 +46,12 @@ case class JsonQueryGenerator(child: Expression, program: String, typeArgs: Seq[
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val raw = child.eval(input)
-    val jsonText = if (raw == null) null else raw.asInstanceOf[UTF8String].toString
-    val outs = compiled.applyToText(jsonText)
+    val outs = JsonQueryGenerator.outputs(compiled, raw)
     new Iterator[InternalRow] {
-      // jq errors surface lazily while iterating; match the reference's
-      // failure contract (JsonQueryUDTF.java:101)
-      private def guard[A](a: => A): A =
-        try a
-        catch {
-          case e: JqError =>
-            throw new RuntimeException(
-              s"""jq returned an error "${e.getMessage}" from input: $jsonText""", e)
-        }
-      override def hasNext: Boolean = guard(outs.hasNext)
+      // jq errors surface lazily while iterating
+      override def hasNext: Boolean = JsonQueryGenerator.guard(raw)(outs.hasNext)
       override def next(): InternalRow = {
-        val node = guard(outs.next())
+        val node = JsonQueryGenerator.guard(raw)(outs.next())
         val row = new Array[Any](marshallers.length)
         if (whole) {
           row(0) = marshallers(0)(node)
@@ -84,6 +75,26 @@ case class JsonQueryGenerator(child: Expression, program: String, typeArgs: Seq[
 }
 
 object JsonQueryGenerator {
+  /** jq outputs for one value `raw` of a string column. A non-null value is
+    * parsed straight from the UTF8String's bytes; it is decoded to a String
+    * only for invalid UTF-8 and for `$error` (see [[CompiledJq.applyToUtf8]]). */
+  private[operators] def outputs(compiled: CompiledJq, raw: Any): Iterator[JsonNode] =
+    if (raw == null) compiled.applyToText(null)
+    else {
+      val bb = raw.asInstanceOf[UTF8String].getByteBuffer
+      compiled.applyToUtf8(bb.array, bb.arrayOffset + bb.position, bb.remaining)
+    }
+
+  /** `a`, with a jq runtime error rethrown under the reference's failure
+    * contract (JsonQueryUDTF.java:101), whose message quotes the input
+    * `raw` as text. */
+  private[operators] def guard[A](raw: Any)(a: => A): A =
+    try a
+    catch {
+      case e: JqError =>
+        throw new RuntimeException(s"""jq returned an error "${e.getMessage}" from input: $raw""", e)
+    }
+
   // NAME:TYPE splitter — same shape the reference accepts (JsonQueryUDTF.java:160)
   private val NameAndType = "^([a-zA-Z_][a-zA-Z0-9_]*):([a-zA-Z_].*)$".r
 

@@ -17,6 +17,11 @@ class BenchSpec extends AnyFunSuite {
       | "queries": {"q_fast": 0.05, "q_mid": 1.5, "q_slow": 10.0},
       | "sf": "/root/testdata/sf0.1"}""".stripMargin
 
+  test("queries_pass1 records a failed query as null") {
+    assert(Bench.pass1Json(Seq("q_ok" -> Some(1.5), "q_failed" -> None)) ==
+      """{"q_ok":1.5,"q_failed":null}""")
+  }
+
   test("parseBaseline reads the committed per-query minima") {
     val m = Bench.parseBaseline(baselineTxt, "/root/testdata/sf0.1")
     assert(m === Map("q_fast" -> 0.05, "q_mid" -> 1.5, "q_slow" -> 10.0))

@@ -1,5 +1,8 @@
 package graft.jq
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Soundness tests for the parse-projection footprint analysis: the
@@ -79,7 +82,7 @@ class FootprintSpec extends AnyFunSuite {
       ".k | select(. > 2)", "[.a[] | {v: .}]", ".miss", ".miss?",
       "\"k=\\(.k)\"", ".a as $x | ($x | length) + .k",
       "reduce .a[] as $i (0; . + $i)", "try (.k + \"x\") catch \"caught\"",
-      "if $error == null then .k else -1 end",
+      "if $error == null then .k else -1 end", "{e: $error, k}",
       // level-2 chains: subfield pruning inside .z / .a
       ".z.deep", ".z.deep.more", "{d: .z.deep, k}", ".a.b, .a.b",
       ".z.deep // .k", ".a.b?", "try .a.b catch \"no\"")
@@ -101,19 +104,28 @@ class FootprintSpec extends AnyFunSuite {
       """{"k": """, // truncated → $error
       """not json at all""",
       """{"k": 1, "k": 2}""", // duplicate key: last wins in both lanes
-      null)
+      null).map(t => if (t == null) null else t.getBytes(UTF_8)) ++ FootprintSpec.byteLevelInputs
     for (p <- programs; in <- inputs) {
       val c = Jq.compile(p)
       assert(c.footprint.isDefined, s"program '$p' should be footprint-eligible")
-      def run(parse: String => (com.fasterxml.jackson.databind.JsonNode,
-                                com.fasterxml.jackson.databind.JsonNode)): Either[String, List[String]] =
-        try {
-          val (v, err) = parse(in)
-          Right(c(v, Map("error" -> err)).map(Json.serialize).toList)
-        } catch { case e: JqError => Left(e.getMessage) }
-      val full = run(Jq.parseWithError)
-      val pruned = run(Jq.parsePrunedWithError(_, c.footprint.get))
-      assert(full == pruned, s"lane mismatch for program '$p' on input '$in': $full vs $pruned")
+      val text = if (in == null) null else new String(in, UTF_8)
+      def run(lane: => Iterator[JsonNode]): Either[String, List[String]] =
+        try Right(lane.map(Json.serialize).toList)
+        catch { case e: JqError => Left(e.getMessage) }
+      def parsed(parse: String => (JsonNode, JsonNode)) = run {
+        val (v, err) = parse(text)
+        c(v, Map("error" -> err))
+      }
+      val full = parsed(Jq.parseWithError)
+      val pruned = parsed(Jq.parsePrunedWithError(_, c.footprint.get))
+      val shown = if (in == null) "null" else FootprintSpec.hex(in)
+      assert(full == pruned, s"lane mismatch for program '$p' on input $shown: $full vs $pruned")
+      if (in != null) {
+        // the byte lane reads a slice of a larger buffer, as from a Spark row
+        val buf = Array[Byte](0x7b, 0xff.toByte) ++ in ++ Array(0xff.toByte)
+        val bytes = run(c.applyToUtf8(buf, 2, in.length))
+        assert(full == bytes, s"byte lane mismatch for program '$p' on input $shown: $full vs $bytes")
+      }
     }
   }
 
@@ -147,4 +159,35 @@ class FootprintSpec extends AnyFunSuite {
       Map("a" -> Some(Set("b"))))
     assert(v3.isNull && err3.isObject)
   }
+}
+
+object FootprintSpec {
+  def bytes(hex: String): Array[Byte] = hex.split(' ').map(Integer.parseInt(_, 16).toByte)
+  def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString(" ")
+  private def utf8(s: String): Array[Byte] = s.getBytes(UTF_8)
+
+  /** Inputs whose bytes matter: the byte lane must parse the valid UTF-8
+    * ones in place and hand every other one to the String lane, so that all
+    * of them give the String lane's outputs and `$error`. */
+  val byteLevelInputs: Seq[Array[Byte]] = Seq(
+    bytes("EF BB BF") ++ utf8("""{"k": 1}"""), // BOM: the String lane rejects it
+    bytes("EF BB BF"),
+    bytes("00 7B 00 7D"), // UTF-16BE-looking {}
+    bytes("7B 00 7D 00"),
+    utf8("""{"k": """") ++ bytes("C0 80") ++ utf8("""", "a": [1]}"""), // overlong NUL
+    utf8("""{"k": """") ++ bytes("ED A0 80") ++ utf8(""""}"""), // surrogate
+    utf8("""{"k": """") ++ bytes("F4 90 80 80") ++ utf8(""""}"""), // above U+10FFFF
+    utf8("""{"k": """") ++ bytes("F5") ++ utf8(""""}"""),
+    utf8("""{"k": """") ++ bytes("F5 80 80 80") ++ utf8(""""}"""), // a 4-byte form past F4
+    utf8("""{"k": "ab""") ++ bytes("80") ++ utf8("""cd"}"""), // stray continuation
+    utf8("""{"k": """") ++ bytes("E4 B8") ++ utf8(""""}"""), // truncated CJK
+    utf8("""{"k": 1, "skipped": """") ++ bytes("ED A0 80") ++ utf8(""""}"""), // in a pruned field
+    utf8("""{"k""") ++ bytes("C0 80") ++ utf8("""": 1}"""), // in a key
+    utf8("""{"k": "a"}""") ++ bytes("E4 B8"), // truncated after the value
+    utf8("""{"k": "smile 😀 🇯🇵", "a": ["😀"]}"""), // 4-byte sequences
+    utf8("""{"k": "中文字符", "中": "值", "a": [1]}"""), // CJK text and key
+    utf8("{\"k\": \"\\u00e9\\u4e2d\\ud83d\\ude00\", \"a\": [\"\\u0041\"]}"), // \\u escapes
+    utf8("""{"k": "é"} é"""), // non-ASCII trailing garbage
+    utf8("""{"k": "中"""), // truncated inside a non-ASCII string
+    utf8("""{"k": 12345678, "a": [1, 2, 3, 4, 5, 6, 7, 8, 9], "s": "abcdefghé"}"""))
 }

@@ -45,6 +45,27 @@ class JqEngineSpec extends AnyFunSuite {
   test("reference: null input text → null input value") {
     assert(Jq.compileCached(".").applyToText(null).map(Json.serialize).toList == List("null"))
   }
+  test("compile cache is bounded: past its bound a program compiles uncached") {
+    val early = Jq.compileCached(".bound_probe")
+    (0 until 4200).foreach(i => Jq.compileCached(s". + $i"))
+    assert(Jq.compileCache.size <= 4096)
+    assert(Jq.compileCached(".bound_probe") eq early, "entries cached before the bound stay")
+    val late = Jq.compileCached(". + 4199")
+    assert(late ne Jq.compileCached(". + 4199"), "a program past the bound is not retained")
+    assert(late.apply(Json.num(1)).map(Json.serialize).toList == List("4200"))
+  }
+
+  test("bounded cache serves hits past its bound, computes misses uncached, caches no failure") {
+    val cache = new BoundedCache[String, String](2)
+    var computed = 0
+    def get(k: String) = cache.getOrCompute(k) { k => computed += 1; k.toUpperCase }
+    intercept[IllegalStateException](cache.getOrCompute("bad")(_ => throw new IllegalStateException))
+    assert(get("a") == "A" && get("b") == "B" && get("c") == "C")
+    assert(cache.size == 2 && computed == 3)
+    assert(get("a") == "A" && computed == 3)
+    assert(get("c") == "C" && computed == 4)
+  }
+
   test("reference: types literal") {
     assert(run1("""{int:2147483647, bigint:9223372036854775807, float:0.1, boolean:true, string:"string"}""") ==
       """{"int":2147483647,"bigint":9223372036854775807,"float":0.1,"boolean":true,"string":"string"}""")

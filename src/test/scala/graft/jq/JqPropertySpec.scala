@@ -1,5 +1,7 @@
 package graft.jq
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import com.fasterxml.jackson.databind.JsonNode
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -178,22 +180,70 @@ class JqPropertySpec extends AnyFunSuite {
       """{"a": [7], "xs": []}""",
       """{"k": {"deep": true}, "other": "skipped"}""",
       """[1, 2]""", """7""", """{}""", """{"bad""", null)
+      .map(t => if (t == null) null else t.getBytes(UTF_8)) ++ FootprintSpec.byteLevelInputs
     forAll(genProg(3)) { prog =>
-      val c = Jq.compile(prog)
+      // `$error` first: the lanes must also bind the same whole $error object
+      val c = Jq.compile(s"$$error, ($prog)")
       c.footprint.foreach { fields =>
         for (in <- inputs) {
-          def run(parse: String => (JsonNode, JsonNode)): Either[String, List[String]] =
-            try {
-              val (v, err) = parse(in)
-              Right(c(v, Map("error" -> err)).map(Json.serialize).toList)
-            } catch { case e: JqError => Left(e.getMessage) }
-          val full = run(Jq.parseWithError)
-          val pruned = run(Jq.parsePrunedWithError(_, fields))
+          val text = if (in == null) null else new String(in, UTF_8)
+          // outputs up to the first error, and that error
+          def run(lane: => Iterator[JsonNode]): (List[String], Option[String]) = {
+            val out = List.newBuilder[String]
+            try { lane.foreach(n => out += Json.serialize(n)); (out.result(), None) }
+            catch { case e: JqError => (out.result(), Some(e.getMessage)) }
+          }
+          def parsed(parse: String => (JsonNode, JsonNode)) = run {
+            val (v, err) = parse(text)
+            c(v, Map("error" -> err))
+          }
+          val full = parsed(Jq.parseWithError)
+          val pruned = parsed(Jq.parsePrunedWithError(_, fields))
+          val bytes = if (in == null) full else run(c.applyToUtf8(in, 0, in.length))
+          val shown = if (in == null) "null" else FootprintSpec.hex(in)
           assert(full == pruned,
-            s"lane mismatch: program '$prog' (footprint $fields) on '$in': $full vs $pruned")
+            s"lane mismatch: program '$prog' (footprint $fields) on $shown: $full vs $pruned")
+          assert(full == bytes,
+            s"byte lane mismatch: program '$prog' (footprint $fields) on $shown: $full vs $bytes")
         }
       }
     }
+  }
+
+  test("strict UTF-8 check accepts exactly the bytes that round-trip through a String") {
+    // lead bytes at and around every boundary of RFC 3629's table, the
+    // continuation range's edges, and ASCII runs that cross the 8-byte fast path
+    val edges = Seq(0x00, 0x41, 0x7f, 0x80, 0x8f, 0x90, 0x9f, 0xa0, 0xbf, 0xc0, 0xc1, 0xc2,
+      0xdf, 0xe0, 0xe1, 0xec, 0xed, 0xee, 0xef, 0xf0, 0xf1, 0xf3, 0xf4, 0xf5, 0xf8, 0xfe, 0xff)
+    val genByte: Gen[Byte] = Gen.frequency(
+      4 -> Gen.oneOf(edges).map(_.toByte),
+      2 -> Gen.choose(0x80, 0xbf).map(_.toByte),
+      3 -> Gen.choose(0x20, 0x7e).map(_.toByte),
+      1 -> Gen.choose(-128, 127).map(_.toByte))
+    val genValid: Gen[Array[Byte]] = Gen.listOf(Gen.frequency(
+      3 -> Gen.alphaNumChar.map(_.toString),
+      1 -> Gen.oneOf("é", "ß", "中", "値", "😀", "\uffff", "\u0080", "\u07ff", "\u0800", "\ud7ff",
+        "\ue000", "\ud800\udc00", "\udbff\udfff"))).map(_.mkString.getBytes(UTF_8))
+    val genMutated: Gen[Array[Byte]] = for {
+      b <- genValid.suchThat(_.nonEmpty)
+      i <- Gen.choose(0, b.length - 1)
+      x <- genByte
+    } yield b.updated(i, x)
+    val genBytes = Gen.oneOf(Gen.listOf(genByte).map(_.toArray), genValid, genMutated)
+    def check(b: Array[Byte]): Unit = {
+      val roundTrips = java.util.Arrays.equals(new String(b, UTF_8).getBytes(UTF_8), b)
+      assert(Utf8.isStrict(b, 0, b.length) == roundTrips, FootprintSpec.hex(b))
+      // the same bytes as a slice between invalid bytes
+      val padded = Array(0xff.toByte) ++ b ++ Array(0xc3.toByte)
+      assert(Utf8.isStrict(padded, 1, b.length) == roundTrips, FootprintSpec.hex(b))
+    }
+    forAll(Gen.listOfN(50, genBytes))(_.foreach(check))
+    // every non-ASCII lead and second byte, followed by up to two bytes at
+    // the edges of the continuation range
+    val tails = Seq(0x7f, 0x80, 0xbf, 0xc0)
+    val rests = Seq(Nil) ++ tails.map(List(_)) ++ (for (x <- tails; y <- tails) yield List(x, y))
+    for (b0 <- 0x80 to 0xff; b1 <- 0 to 0xff; rest <- rests)
+      check((b0 :: b1 :: rest).map(_.toByte).toArray)
   }
 
   test("parser never hangs or escapes JqSyntaxError on garbage programs") {

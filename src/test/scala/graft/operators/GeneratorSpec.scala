@@ -129,6 +129,40 @@ class GeneratorSpec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("Unrecognized token")))
   }
 
+  test("invalid UTF-8 and BOM rows: $error and decoded text as from a Java String") {
+    // (bytes of the row, output of the $error substitute pattern)
+    val rows = Seq(
+      "EFBBBF7B226B223A2276227D" -> "INVALID: \ufeff{\"k\":\"v\"}", // BOM
+      "007B007D" -> "INVALID: \u0000{\u0000}",
+      "7B226B223A2276227DFF" -> "INVALID: {\"k\":\"v\"}\ufffd", // invalid trailing byte
+      "7B226B223A22C080227D" -> "\ufffd\ufffd", // overlong NUL
+      "7B226B223A22EDA080227D" -> "\ufffd", // surrogate
+      "7B226B223A22F4908080227D" -> "\ufffd\ufffd\ufffd\ufffd", // above U+10FFFF
+      "7B226B223A22F5227D" -> "\ufffd",
+      "7B226B223A22618062227D" -> "a\ufffdb", // stray continuation
+      "7B226B223A22E4B8227D" -> "\ufffd", // truncated
+      "7B226B223A22E4B8AD227D" -> "\u4e2d") // valid CJK
+    val values = rows.zipWithIndex.map { case ((hex, _), i) => s"($i, X'$hex')" }.mkString(", ")
+    val out = spark.sql(
+      s"""SELECT x.col1 FROM (SELECT id, CAST(b AS STRING) AS j FROM VALUES $values AS t(id, b)) s
+         |LATERAL VIEW jq(j, 'if $$error then "INVALID: " + $$error.input else .k end', 'string') x
+         |ORDER BY id""".stripMargin)
+    assert(out.as[String].collect().toSeq == rows.map(_._2))
+  }
+
+  test("jq runtime errors quote the non-ASCII input in jq, jq_string and jq_extract_all") {
+    val in = "{\"k\": \"\u00e9\u4e2d \ud83d\ude00\"}"
+    val expected = "jq returned an error \"string (\"\u00e9\u4e2d \ud83d\ude00\") and number (1) " +
+      "cannot be added\" from input: " + in
+    val df = Seq(in).toDF("j")
+    for (col <- Seq(graft.Graft.jq($"j", ".k + 1", "string"), graft.Graft.jqString($"j", ".k + 1"),
+        graft.Graft.jqExtractAll($"j", ".k + 1"))) {
+      val e = intercept[Exception](df.select(col).collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toList
+      assert(messages.exists(m => m != null && m.contains(expected)), messages.mkString("\n"))
+    }
+  }
+
   test("non-constant JQ argument is rejected") {
     Seq(("{}", ".")).toDF("j", "prog").createOrReplaceTempView("nc")
     val e = intercept[Exception](spark.sql("SELECT jq(j, prog, 'string') FROM nc").collect())
